@@ -51,7 +51,3 @@ def minhash_perms(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
 def perm_hash(h: Column, a: int, b: int) -> Column:
     """(a·h + b) mod P31 over a 31-bit input — overflow-free in int64."""
     return (F.lit(a) * h + F.lit(b)) % P31
-
-
-def perm_hash_sql(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * {h_expr} + {b}) % {P31})"

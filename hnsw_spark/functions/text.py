@@ -17,10 +17,6 @@ def words(col: Column | str) -> Column:
     return F.split(F.trim(F.lower(c)), r"\s+")
 
 
-def word_count(col: Column | str) -> Column:
-    return F.size(words(col))
-
-
 # BPE-ish subword tokens: letter runs, digit runs, or single other non-space
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
@@ -108,10 +104,6 @@ def stopword_ratio_w(w: Column) -> Column:
     return F.when(F.size(w) == 0, F.lit(0.0)).otherwise(hits / F.size(w))
 
 
-def stopword_ratio(col: Column | str) -> Column:
-    return stopword_ratio_w(words(col))
-
-
 def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     nonpunct = F.length(F.regexp_replace(c, r"[^a-zA-Z0-9\s]", ""))
@@ -125,10 +117,6 @@ def avg_word_len_w(w: Column) -> Column:
     return F.when(F.size(w) == 0, F.lit(0.0)).otherwise(
         total.cast("double") / F.size(w)
     )
-
-
-def avg_word_len(col: Column | str) -> Column:
-    return avg_word_len_w(words(col))
 
 
 def quality_score_w(text: Column, w: Column) -> Column:

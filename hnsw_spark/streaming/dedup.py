@@ -9,14 +9,12 @@ their fingerprints to the seen set — so the corpus stays exact-duplicate-
 free forever without ever re-scanning it (only the 16-bytes-a-row
 fingerprint table participates in the check).
 
-Exactly-once under retries: ``foreachBatch`` may replay an epoch after a
-failure.  Both sinks write into an ``epoch_id`` partition with DYNAMIC
-partition overwrite (the ``StreamingVectorIngest`` pattern), so a replay
-overwrites its own previous partial output.  The subtle hazard is the seen
-set itself: a replayed epoch would find its OWN fingerprints from the
-failed attempt and drop every survivor as "already seen" — so the seen
-read always excludes the current epoch's partition (partition pruning
-makes the exclusion free).
+Exactly-once under retries: both sinks are epoch commits
+(``streaming/epochs.py``), so a replay overwrites its own previous partial
+output.  The subtle hazard is the seen set itself: a replayed epoch
+would find its OWN fingerprints from the failed attempt and drop every
+survivor as "already seen" — so the seen read always excludes the current
+epoch's partition (partition pruning makes the exclusion free).
 """
 
 from __future__ import annotations
@@ -24,8 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hnsw_spark.streaming.epochs import EpochSink, _read_or_empty, write_epoch
 
-class StreamingCorpusDedup:
+
+class StreamingCorpusDedup(EpochSink):
     def __init__(
         self,
         corpus_path: str,
@@ -40,11 +40,6 @@ class StreamingCorpusDedup:
         self.kept = 0
 
     def _seen(self, spark, exclude_epoch: int) -> DataFrame:
-        # probe by attempted read, not os.path.isdir — isdir only understands
-        # local paths and would silently report an empty seen set on HDFS/S3
-        # (same ADVICE-r4 fix as streaming/sketch.py)
-        from hnsw_spark.streaming.sketch import _read_or_empty
-
         return (
             _read_or_empty(
                 spark, self.seen_path, "fingerprint string, epoch_id int"
@@ -71,17 +66,5 @@ class StreamingCorpusDedup:
             (self.corpus_path, survivors),
             (self.seen_path, survivors.select("fingerprint", "epoch_id")),
         ):
-            (
-                frame.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
+            write_epoch(frame, path, "epoch_id")
         self.kept += survivors.count()
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )

@@ -16,21 +16,16 @@ into a larger window and pay proportionally more state — exactly a
 watermark's semantics.  Rows ALREADY emitted are never retroactively
 re-featured when a late event lands inside their frame (the batch
 backfill is the correction path — standard in any streaming feature
-store).  Each epoch:
+store).
 
-1. reads the latest tail version strictly BEFORE this epoch (so a replayed
-   epoch recomputes from the same prior state — deterministic retries),
-2. computes the batch rows' features over ``tail ∪ batch`` with the exact
-   batch operator (the RANGE frames see the full trailing interval for
-   every row within the lateness contract),
-3. writes the feature rows into an ``epoch_id`` partition with DYNAMIC
-   overwrite (a replay overwrites itself — exactly-once), and
-4. writes the new tail as version ``epoch`` (also dynamic-overwrite
-   idempotent).
-
+Each epoch reads the prior tail version, computes the batch rows'
+features over ``tail ∪ batch`` with the exact batch operator (the RANGE
+frames see the full trailing interval for every row within the lateness
+contract), commits the feature rows into an ``epoch_id`` partition and the
+new tail as version ``epoch`` — the epoch protocol of
+``streaming/epochs.py`` (deterministic replays, ~2 tail versions live).
 Per-epoch cost is O(tail + batch) — one window shuffle on the key over the
-union, never the history; old tail versions are dropped eagerly, keeping
-state at ~2 versions x tail size.
+union, never the history.
 """
 
 from __future__ import annotations
@@ -38,14 +33,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_spark.streaming.sketch import (
-    _partition_versions,
+from hnsw_spark.streaming.epochs import (
+    VERSION_COL,
+    EpochSink,
     _read_or_empty,
-    _read_or_none,
+    prune_versions,
+    read_version_before,
+    write_epoch,
 )
 
 
-class StreamingTrailingFeatures:
+class StreamingTrailingFeatures(EpochSink):
     def __init__(
         self,
         out_path: str,
@@ -68,28 +66,6 @@ class StreamingTrailingFeatures:
         self.id_col = id_col
         self.scale = scale
 
-    def _tail_before(self, spark, epoch_id: int, schema) -> DataFrame:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        full = StructType(list(schema.fields) + [StructField("_v", IntegerType())])
-        raw = _read_or_none(spark, self.tail_path)
-        tails = raw if raw is not None else spark.createDataFrame([], full)
-        # version discovery from the partition directory names (one less
-        # Spark job per epoch); Spark-side distinct only when not listable
-        # AND the read found state (a failed read proves there are no
-        # versions — no job needed on the first epoch)
-        listed = _partition_versions(self.tail_path, "_v=")
-        if listed is None:
-            listed = (
-                []
-                if raw is None
-                else [r["_v"] for r in tails.select("_v").distinct().collect()]
-            )
-        versions = [v for v in listed if v < epoch_id]
-        if not versions:
-            return tails.drop("_v").limit(0)
-        return tails.filter(F.col("_v") == max(versions)).drop("_v")
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         from pyspark.storagelevel import StorageLevel
 
@@ -99,7 +75,9 @@ class StreamingTrailingFeatures:
             return
         spark = batch.sparkSession
         cols = batch.columns
-        tail = self._tail_before(spark, int(epoch_id), batch.schema)
+        tail = read_version_before(
+            spark, self.tail_path, int(epoch_id), batch.schema
+        )
         # id-dedup: a replayed epoch's rows may already sit in a tail
         # version written by the failed attempt's successor — dedup makes
         # the union (and therefore the features) attempt-invariant.  A
@@ -142,12 +120,7 @@ class StreamingTrailingFeatures:
         out = feats.join(F.broadcast(batch_ids), self.id_col).withColumn(
             "epoch_id", F.lit(int(epoch_id))
         )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(self.out_path)
-        )
+        write_epoch(out, self.out_path, "epoch_id")
         # retention = horizon + allowed lateness: a row arriving ℓ late
         # needs frame events back to hw - ℓ - W (see module docstring).
         # The high watermark rides the tail-write job as a broadcast 1-row
@@ -164,42 +137,11 @@ class StreamingTrailingFeatures:
                 >= F.col("_hw") - F.expr(f"INTERVAL {int(keep)} SECOND")
             )
             .drop("_hw")
-            .withColumn("_v", F.lit(int(epoch_id)))
+            .withColumn(VERSION_COL, F.lit(int(epoch_id)))
         )
-        (
-            new_tail.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_v")
-            .parquet(self.tail_path)
-        )
+        write_epoch(new_tail, self.tail_path, VERSION_COL)
         union.unpersist()
-        self._drop_old_tails(spark, int(epoch_id))
-
-    def _drop_old_tails(self, spark, epoch_id: int) -> None:
-        """Keep versions >= epoch_id - 1 (the replay window); local-path
-        best effort — object stores would use lifecycle rules."""
-        import os
-        import shutil
-
-        if not os.path.isdir(self.tail_path):
-            return
-        for d in os.listdir(self.tail_path):
-            if d.startswith("_v="):
-                try:
-                    if int(d[3:]) < epoch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(self.tail_path, d),
-                            ignore_errors=True,
-                        )
-                except ValueError:
-                    pass
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        prune_versions(self.tail_path, int(epoch_id))
 
     def features(self, spark, schema) -> DataFrame:
         """Everything computed so far (all epoch partitions).  ``schema``

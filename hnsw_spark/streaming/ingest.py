@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hnsw_spark.streaming.epochs import EpochSink, write_epoch
+
 EVENTS_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -133,7 +135,7 @@ def stream_interval_join(
     return l.join(r, cond)
 
 
-class StreamingVectorIngest:
+class StreamingVectorIngest(EpochSink):
     """Incremental index maintenance (the addPoint path, B2).
 
     Each micro-batch of (vec_id, embedding) rows is assigned to its nearest
@@ -174,30 +176,14 @@ class StreamingVectorIngest:
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        # exactly-once under retries: foreachBatch may replay an epoch after
-        # a failure, and a blind append would double-insert the whole batch.
-        # Writing into an epoch_id partition with DYNAMIC partition overwrite
-        # makes the replay overwrite its own previous (possibly partial)
-        # output instead of duplicating it — epochs already committed are
-        # untouched because only partitions present in the batch are replaced.
+        # an epoch commit (streaming/epochs.py): a blind append would
+        # double-insert the whole batch on a foreachBatch replay
         assigned = self.assign(batch).withColumn("epoch_id", F.lit(int(epoch_id)))
-        (
-            assigned.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "list_id")
-            .parquet(self.nodes_path)
-        )
+        write_epoch(assigned, self.nodes_path, "epoch_id", "list_id")
         self.appended += batch.count()
 
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
 
-
-class StreamingGraphIngest:
+class StreamingGraphIngest(EpochSink):
     """Incremental HNSW maintenance over a vector stream: each micro-batch
     is wired into the persisted graph index with ``add_points`` (the true
     addPoint path — identical adjacency to a continued sequential build) and
@@ -228,10 +214,3 @@ class StreamingGraphIngest:
         grown = add_points(index, batch)
         grown.index_df = grown.index_df.localCheckpoint(eager=True)
         save_index(grown, self.index_path)
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )

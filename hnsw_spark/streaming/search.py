@@ -7,9 +7,8 @@ query STREAM (a topic/directory of arriving query batches) joined against
 the cached index: each micro-batch routes through the same probe-pruned
 ``IVFIndex.search`` plan the batch tier uses — identical results, identical
 recall knobs — and appends (query_id, id, score, epoch_id) to the results
-sink.  Exactly-once under retries via dynamic epoch-partition overwrite
-(the StreamingVectorIngest pattern: a replayed epoch overwrites its own
-partial output, committed epochs are untouched).
+sink.  Exactly-once under retries: each epoch's answers are an epoch
+commit (``streaming/epochs.py``).
 
 The index node table should be ``.cache()``-ed by the caller: every
 micro-batch reuses it, so the scan amortizes to memory reads; a refreshed
@@ -22,8 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hnsw_spark.streaming.epochs import EpochSink, write_epoch
 
-class StreamingSearch:
+
+class StreamingSearch(EpochSink):
     def __init__(
         self,
         index,
@@ -51,17 +52,5 @@ class StreamingSearch:
             query_id=self.query_id,
             query_vec=self.query_vec,
         ).withColumn("epoch_id", F.lit(int(epoch_id)))
-        (
-            res.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(self.results_path)
-        )
+        write_epoch(res, self.results_path, "epoch_id")
         self.answered += batch.count()
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )

@@ -9,10 +9,9 @@ merge-of-partials shape ``incremental_rollup`` uses for aggregates.  A
 100 TB/day stream therefore costs depth·width skinny rows per epoch, and
 reading the sketch never touches the raw stream again.
 
-Exactly-once under retries: ``foreachBatch`` may replay an epoch after a
-failure; DYNAMIC partition overwrite makes the replay overwrite its own
-previous partial delta (the ``StreamingCorpusDedup`` pattern), so no cell
-is ever double-counted.
+Exactly-once under retries: each delta is an epoch commit
+(``streaming/epochs.py``), so a replayed epoch overwrites its own previous
+partial delta and no cell is ever double-counted.
 """
 
 from __future__ import annotations
@@ -20,77 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _read_or_none(spark, path: str) -> DataFrame | None:
-    """Read the epoch-partition tree, or ``None`` before the first epoch
-    lands.  Existence is probed by attempting the read and catching the
-    analysis error — NOT ``os.path.isdir``, which only understands local
-    paths and would silently report an empty sketch for HDFS/S3 URIs even
-    when epoch partitions exist (ADVICE r4).  The ``None`` signal lets
-    version-discovery callers skip their Spark-side distinct fallback when
-    the read itself proved there is no state (a per-epoch job saved on the
-    first epoch of every versioned-state stream)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis so a missing path raises here
-        return df
-    except AnalysisException:
-        return None
+from hnsw_spark.streaming.epochs import EpochSink, _read_or_empty, write_epoch
 
 
-def _read_or_empty(spark, path: str, schema: str) -> DataFrame:
-    """`_read_or_none` with an empty typed frame in place of ``None``."""
-    df = _read_or_none(spark, path)
-    return df if df is not None else spark.createDataFrame([], schema)
-
-
-def _partition_versions(path: str, prefix: str) -> list[int] | None:
-    """Distinct partition values of an integer partition column, read from
-    the partition DIRECTORY NAMES (``<prefix><n>``) instead of a Spark
-    ``select(col).distinct().collect()`` job — a per-epoch fixed cost on
-    every versioned-state reader.  Returns ``None`` when the path is not a
-    locally listable directory (HDFS/S3 URI, or nothing written yet), in
-    which case callers fall back to the Spark-side distinct.
-
-    Failure-atomicity trust (VERDICT r13 #9): Spark's parquet commit
-    protocol stages output under ``_temporary`` and only renames data
-    files into the partition directory at task/job commit, so a version
-    directory that exists is treated as committed — the same trust the
-    eager version-pruners already place in the listing
-    (``_drop_old_versions``/``_drop_old_tails``).  The one observable
-    divergence from the read-based distinct — a directory left WITHOUT
-    data files (a crash between directory creation and file rename, or a
-    manually planted stray) would be listed here but holds no rows for the
-    read — is closed explicitly: a version is only reported when its
-    directory contains at least one non-hidden file, exactly matching what
-    ``select(col).distinct()`` would return (pinned by
-    tests/test_streaming_encoding.py::test_stray_empty_version_dir)."""
-    import os
-
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return None
-    out = []
-    for d in names:
-        if not d.startswith(prefix):
-            continue
-        try:
-            v = int(d[len(prefix):])
-        except ValueError:
-            continue
-        try:
-            entries = os.listdir(os.path.join(path, d))
-        except OSError:
-            continue  # a file, or vanished mid-listing: not a version
-        if any(not e.startswith(("_", ".")) for e in entries):
-            out.append(v)
-    return out
-
-
-class StreamingCountMin:
+class StreamingCountMin(EpochSink):
     def __init__(
         self,
         counters_path: str,
@@ -111,19 +43,7 @@ class StreamingCountMin:
         delta = count_min_counters(
             batch, self.col, self.width, self.depth
         ).withColumn("epoch_id", F.lit(int(epoch_id)))
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(self.counters_path)
-        )
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        write_epoch(delta, self.counters_path, "epoch_id")
 
     def counters(self, spark) -> DataFrame:
         """The merged live sketch — identical cell-for-cell to the batch
@@ -137,13 +57,13 @@ class StreamingCountMin:
         )
 
 
-class StreamingHLL:
+class StreamingHLL(EpochSink):
     """Streaming HyperLogLog: per-epoch register deltas merged by MAX —
-    the other mergeable-sketch reduction (CM adds, HLL maxes).  Same
-    exactly-once epoch-partition pattern as ``StreamingCountMin``; the
-    live estimate replays ``operators/sketches.py::hll_estimate``'s
-    estimator over the merged registers, so stream and batch agree
-    register-for-register on the same ingested rows."""
+    the other mergeable-sketch reduction (CM adds, HLL maxes), committed
+    per epoch like ``StreamingCountMin``; the live estimate replays
+    ``operators/sketches.py::hll_estimate``'s estimator over the merged
+    registers, so stream and batch agree register-for-register on the
+    same ingested rows."""
 
     def __init__(self, registers_path: str, col: str = "v", b: int = 8):
         self.registers_path = registers_path
@@ -158,19 +78,7 @@ class StreamingHLL:
         delta = hll_registers(batch, self.col, self.b).withColumn(
             "epoch_id", F.lit(int(epoch_id))
         )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(self.registers_path)
-        )
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        write_epoch(delta, self.registers_path, "epoch_id")
 
     def registers(self, spark) -> DataFrame:
         return (
@@ -180,14 +88,13 @@ class StreamingHLL:
         )
 
 
-class StreamingKMV:
+class StreamingKMV(EpochSink):
     """Streaming KMV distinct/overlap sketch: per-epoch bottom-k deltas
     merged by distinct-union-then-bottom-k — the third mergeable-sketch
     reduction in this module (CM adds, HLL maxes, KMV re-minimizes).
-    Same exactly-once epoch-partition pattern: a replayed epoch
-    overwrites its OWN partial delta, so a hash can appear in at most one
-    copy per epoch and the distinct() merge makes cross-epoch repeats
-    harmless anyway.
+    A replayed epoch overwrites its OWN partial delta (the epoch commit),
+    so a hash can appear in at most one copy per epoch and the distinct()
+    merge makes cross-epoch repeats harmless anyway.
 
     The live sketch equals ``operators/sketches.py::kmv_sketch`` over
     everything ingested so far (parity-pinned), so a continuously-fed
@@ -214,19 +121,7 @@ class StreamingKMV:
         delta = kmv_sketch(batch, self.col, self.k).withColumn(
             "epoch_id", F.lit(int(epoch_id))
         )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(self.sketch_path)
-        )
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        write_epoch(delta, self.sketch_path, "epoch_id")
 
     def sketch(self, spark) -> DataFrame:
         """The merged live sketch — the bottom-k distinct hashes of every

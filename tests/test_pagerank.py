@@ -58,8 +58,11 @@ def test_pagerank_snapshots_match_separate_calls(spark):
 
 def test_pagerank_snapshots_validation_and_empty(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
-    with pytest.raises(ValueError):
-        pagerank(df, snapshots=(0, 2))
+    # ADVICE r14: a duplicate would return fewer frames than requested and
+    # an unsorted tuple would be silently reordered — both raise too
+    for bad in ((0, 2), (3, 3), (4, 2), (2, 5, 4), ()):
+        with pytest.raises(ValueError, match="strictly increasing"):
+            pagerank(df, snapshots=bad)
     empty = spark.createDataFrame([], "src long, dst long")
     snaps = pagerank(empty, snapshots=(1, 2))
     assert [s.count() for s in snaps] == [0, 0]

@@ -4,7 +4,8 @@ column pruning, and shuffle-free sampling/scrubbing.  A refactor that
 silently adds an exchange, un-prunes a scan, or flips a broadcast join to
 sort-merge fails here instead of on the cluster.
 
-Plan-only: nothing executes, so the whole module is cheap."""
+Plan-only except the stream-gate job budgets at the end, which run their
+three queries once each."""
 
 from __future__ import annotations
 
@@ -316,3 +317,30 @@ def test_scd2_enrichment_broadcasts_dim_no_fact_shuffle(spark):
     # the only exchanges are the dimension build's key window; the fact
     # scan feeds the join directly
     assert f.shuffles <= 2
+
+
+# Job budgets of the streaming parity gates (frame build + collect), counted
+# at sf0.01 on local[4] when the epoch-commit protocol moved into
+# streaming/epochs.py: a sink refactor must not add a Spark job per epoch.
+_STREAM_GATE_JOBS = {
+    "trailing_features_stream_gate": 38,
+    "target_encode_stream_gate": 29,
+    "kmv_stream_parity_gate": 17,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_STREAM_GATE_JOBS))
+def test_stream_gate_job_budget(spark, name):
+    from hnsw_spark.plans.cachereg import release_caches
+
+    sc = spark.sparkContext
+    group = f"job_budget_{name}"
+    release_caches()
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](spark, SF).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_caches()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _STREAM_GATE_JOBS[name], (name, jobs)

@@ -45,15 +45,22 @@ def test_stray_empty_version_dir(spark, tmp_stats):
     """VERDICT r13 #9: a committed-looking ``_v=N`` directory WITHOUT data
     files (crash between mkdir and commit-rename, or a planted stray) must
     be invisible to directory-listing version discovery, exactly as it is
-    to the read-based distinct fallback — otherwise ``_stats_before``
-    would select the stray as the latest prior and serve an EMPTY state."""
-    from hnsw_spark.streaming.sketch import _partition_versions
+    to the read-based distinct fallback — otherwise ``read_version_before``
+    would select the stray as the latest prior and serve an EMPTY state.
+    ADVICE r14: the pruner builds its keep-set from the same listing, so a
+    stray BETWEEN the real prior and the live epoch must not displace the
+    real prior — a retry of the live epoch still needs it."""
+    from hnsw_spark.streaming.epochs import _partition_versions
 
     df = spark.createDataFrame(_ROWS, _SCHEMA)
+    first = df.filter(F.col("row_id") <= 4)
+    rest = df.filter(F.col("row_id") > 4)
     ste = StreamingTargetEncoder(tmp_stats, "cat", "y", alpha=5, scale=4)
-    ste.process_batch(df, 0)
-    # plant a stray committed-looking version above the real one: empty,
-    # and one holding only hidden/metadata entries (the crash shapes)
+    ste.process_batch(first, 0)
+    # plant stray committed-looking versions — one between the real
+    # version and the next live epoch, two above: empty, and one holding
+    # only hidden/metadata entries (the crash shapes)
+    os.makedirs(os.path.join(tmp_stats, "_v=1"))
     os.makedirs(os.path.join(tmp_stats, "_v=99"))
     os.makedirs(os.path.join(tmp_stats, "_v=100"))
     open(os.path.join(tmp_stats, "_v=100", "_SUCCESS"), "w").close()
@@ -64,6 +71,13 @@ def test_stray_empty_version_dir(spark, tmp_stats):
     )
     assert sorted(listed) == spark_side == [0]
     # the serving read still sees version 0's stats, not an empty frame
+    got = _encoded(ste.encode(first))
+    want = _encoded(target_encode_loo(first, "cat", "y", alpha=5, scale=4))
+    assert got == want
+    # the epoch-2 prune keeps the real prior (0), not the stray (1)
+    ste.process_batch(rest, 2)
+    assert sorted(_partition_versions(tmp_stats, "_v=")) == [0, 2]
+    ste.process_batch(rest, 2)  # a retry of the live epoch
     got = _encoded(ste.encode(df))
     want = _encoded(target_encode_loo(df, "cat", "y", alpha=5, scale=4))
     assert got == want

@@ -69,6 +69,42 @@ def test_stream_epochs_with_replay_equal_batch(spark, events, tmp_path):
     assert (hw - oldest).total_seconds() <= 86400
 
 
+def test_latest_epoch_retry_after_empty_epochs(spark, events, tmp_path):
+    """Empty micro-batches write no tail version, so the latest epoch's
+    true prior can sit any numeric distance below it: the prune must keep
+    that actual prior, or a retry of the latest epoch recomputes its
+    features over an empty tail and silently rewrites them."""
+    import os
+
+    tail_path = str(tmp_path / "tail_gap")
+    stf = StreamingTrailingFeatures(
+        str(tmp_path / "out_gap"), tail_path,
+        horizons_s=[3600, 86400], scale=4,
+    )
+    b0 = "2024-01-11 00:00:00"
+    early = events.filter(F.col("ts") < b0)
+    late = events.filter(F.col("ts") >= b0)
+    stf.process_batch(early, 0)
+    stf.process_batch(late.limit(0), 1)  # empty epochs: no tail version
+    stf.process_batch(late.limit(0), 2)
+    stf.process_batch(late, 3)
+
+    def versions():
+        names = os.listdir(tail_path)
+        return {int(d[3:]) for d in names if d.startswith("_v=")}
+
+    assert versions() == {0, 3}  # epoch 3's prior survives its prune
+    stf.process_batch(late, 3)  # the foreachBatch retry
+    assert versions() == {0, 3}
+    got = {
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "out_gap"))
+        .select(*FEATS)
+        .collect()
+    }
+    assert got == _batch_truth(events)
+
+
 def test_single_epoch_equals_batch(spark, events, tmp_path):
     # one epoch == plain batch backfill (no tail exists yet)
     stf = StreamingTrailingFeatures(
